@@ -150,10 +150,12 @@ object Graft {
       plans.TopKPerKeyNode(groupCols.map(attr), order, k, child))
   }
 
-  /** As-of join: for each `left` row, the greatest `rightTs` <= its
+  /** As-of join (q16's oracle-checked binding): for each `left` row,
+    * the `valueCol` of the latest `right` row with `rightTs` <= its
     * `leftTs` within the same `key` — union + single window pass, no
-    * range join (see PERF.md / q16). Emits left rows with a
-    * `asof_<valueCol>` column (null when nothing precedes). */
+    * range join (see PERF.md). Right rows sort before left rows at
+    * equal timestamps. Emits left rows with a `asof_<valueCol>`
+    * column (null when nothing precedes). */
   def asOfJoin(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, valueCol: String): DataFrame = {
     val l = left.withColumn("__kind", lit(1))
@@ -218,14 +220,18 @@ object Graft {
     keepFirstPerKey(fresh, col("__h"), idCol).drop("__h")
   }
 
-  /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
-    * threshold ~ (1/bands)^(1/rowsPerBand); see ops.TextDedup. */
+  /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification
+    * (d06's oracle-checked binding; d08 and d18 label its pairs with
+    * [[ops.TextDedup.componentMin]]). threshold ~
+    * (1/bands)^(1/rowsPerBand); see ops.TextDedup. */
   def nearDupPairs(df: DataFrame, textCol: String, idCol: String,
       bands: Int = 16, rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame = {
     val docs = df.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     // single linear pipeline: the verify join consumes the candidate
-    // table exactly once, so no persist (and no cache leak) is needed
-    val cand = ops.TextDedup.minhashCandidates(docs, bands, rowsPerBand)
+    // table exactly once, so no persist (and no cache leak) is needed;
+    // the raw (band-duplicated) candidates suffice because the verify
+    // groupBy collapses duplicate pairs
+    val cand = ops.TextDedup.minhashCandidatesRaw(docs, bands, rowsPerBand)
     ops.TextDedup.jaccardVerify(docs, cand).filter(col("jaccard") >= minJaccard)
   }
 
@@ -370,7 +376,8 @@ object Graft {
       .filter(col("rank") <= k)
   }
 
-  /** Whitespace + BPE-ish token counts (see TextAnalysis.t06). */
+  /** Whitespace + BPE-ish token counts (t06's oracle-checked binding;
+    * the pattern rationale is on TextAnalysis.t06). */
   def tokenCounts(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("n_ws_tokens",
         size(ops.TextDedup.tokens(col(textCol))).cast("long"))
@@ -381,8 +388,10 @@ object Graft {
   /** Near-duplicate REMOVAL: LSH + exact-jaccard pairs above
     * `minJaccard`, connected components, keep the minimum-id member of
     * each cluster. Returns `df` minus the dropped duplicates — the
-    * operation a training-data pipeline actually applies (see
-    * TextDedup.d08 for the oracle-checked harness binding). */
+    * operation a training-data pipeline actually applies. No registry
+    * query returns the survivors; d08 gates the dropped (id, kept)
+    * set this anti-joins away, built from the same [[nearDupPairs]]
+    * and [[ops.TextDedup.componentMin]] calls. */
   def dedupNear(df: DataFrame, textCol: String, idCol: String,
       bands: Int = 8, rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame = {
     val pairs = nearDupPairs(df, textCol, idCol, bands, rowsPerBand, minJaccard)
@@ -392,8 +401,9 @@ object Graft {
     df.join(dropped, Seq(idCol), "left_anti")
   }
 
-  /** SimHash near-dup pairs over an arbitrary frame (block-LSH +
-    * hamming verify; see TextDedup.simhashPairs). */
+  /** SimHash near-dup pairs over an arbitrary frame (d07's
+    * oracle-checked binding; block-LSH + hamming verify; see
+    * TextDedup.simhashPairs). */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 3): DataFrame =
     ops.TextDedup.simhashPairs(
@@ -559,11 +569,11 @@ object Graft {
       .withColumn("dist", levenshtein(col(leftCol), col(rightCol)).cast("long"))
       .filter(col("dist") <= maxDist)
 
-  /** Forward fill / LOCF (q29's oracle-checked binding): appends
-    * `filled_<valueCol>` = the latest non-null `valueCol` at-or-before
-    * each row within its `keyCol` partition, ordered by (`tsCol`,
-    * `tieCol`). One shuffle on the key; the IGNORE NULLS running frame
-    * is O(1) per row. */
+  /** Forward fill / LOCF (q29's oracle-checked binding, which carries
+    * the last purchase value through it): appends `filled_<valueCol>`
+    * = the latest non-null `valueCol` at-or-before each row within its
+    * `keyCol` partition, ordered by (`tsCol`, `tieCol`). One shuffle on
+    * the key; the IGNORE NULLS running frame is O(1) per row. */
   def fillForward(df: DataFrame, keyCol: String, tsCol: String,
       tieCol: String, valueCol: String): DataFrame = {
     val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
@@ -706,7 +716,8 @@ object Graft {
     df.join(best, df(idCol) <=> best("__bid")).drop("__bid")
   }
 
-  /** Cross-split leakage audit (d12's oracle-checked binding): for
+  /** Cross-split leakage audit (d12's oracle-checked binding, with the
+    * test split as `audit` and the train split as `corpus`): for
     * every row of `audit`, how many of its distinct `chunkLen`-token
     * chunks appear anywhere in `corpus` — the decontamination check
     * between a training corpus and an eval/test split. Chunks fold to
@@ -853,7 +864,8 @@ object Graft {
     * assignment [[semanticDedupWithCentroids]] and [[kmeansFitLong]]
     * iterations run. `centroids`: (centroid_id, c) — [[kmeansFit]]'s
     * output shape. Ties to the larger centroid id (the engine-wide
-    * convention). */
+    * convention). The s26–s31 IVF posting builds assign through it,
+    * gated by s02's and s08's oracles. */
   def assignToCentroids(df: DataFrame, vecCol: String,
       centroids: DataFrame): DataFrame =
     df.withColumn("cluster",
@@ -1777,7 +1789,7 @@ object Graft {
   }
 
   /** The shared [[pageRank]]/[[pageRankFrom]] loop over a PREPARED
-    * edge frame: `e` must already be materialized (a checkpoint scan,
+    * edge frame: `edges` must already be materialized (a checkpoint scan,
     * or a partitioning-preserving filter/projection over one) and
     * hash-partitioned on `src` with the session shuffle-partition
     * count — the public wrappers guarantee it by checkpointing the
@@ -1796,12 +1808,16 @@ object Graft {
     * hash-partitioned on src and nodes on node, so each iteration's
     * two joins see co-partitioned inputs and plan ZERO exchange on
     * the checkpointed sides; the only per-iteration shuffle left is
-    * the contrib scatter's groupBy(dst->node), the irreducible one. */
-  private[graft] def pageRankRounds(e: DataFrame, init: Option[DataFrame],
-      iters: Int, dampingPct: Int): DataFrame = {
+    * the contrib scatter's groupBy(dst->node), the irreducible one.
+    *
+    * `edges` is by-name so the argument checks run before the public
+    * wrappers' edge checkpoint: bad arguments throw with no job run. */
+  private[graft] def pageRankRounds(edges: => DataFrame,
+      init: Option[DataFrame], iters: Int, dampingPct: Int): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters out of range: $iters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct out of range: $dampingPct")
+    val e = edges
     val nPart = e.sparkSession.sessionState.conf.numShufflePartitions
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__outdeg"))
     val edgesD = checkpointOn(
@@ -2785,9 +2801,11 @@ object Graft {
     *
     * Either way the distance frame is NODE-sized, never edge-sized,
     * the edge list localCheckpoints once and is reused, and the
-    * driver holds nothing. Negative and NULL weights are rejected (an
-    * EAGER validation pass over the checkpointed edge list — one
-    * in-memory scan, paid once per call): with nonnegative weights a
+    * driver holds nothing. Negative and NULL weights are rejected at
+    * build time: the guard rides the edge checkpoint's own projection,
+    * so a bad weight fails that checkpoint job as a Spark execution
+    * failure whose message carries "negative or null edge weight"
+    * (no separate validation pass). With nonnegative weights a
     * bounded-round result is monotone in `iters` and safe to read as
     * "distance using <= iters hops". */
   def shortestPaths(edges: DataFrame, seeds: DataFrame,
@@ -3795,8 +3813,9 @@ object Graft {
     * idf-weighted word-3-shingle cosine, with candidate pairs gated to
     * shingles of document frequency in [dfMin, dfMax] (prefix
     * filtering — boilerplate shingles never generate pairs) and an
-    * exact cosine rerank over every shared shingle. The weighted
-    * complement of [[nearDupPairs]]'s unweighted Jaccard; see
+    * exact cosine rerank over every shared shingle (d17's
+    * oracle-checked binding). The weighted complement of
+    * [[nearDupPairs]]'s unweighted Jaccard; see
     * [[ops.TextDedup.sparseCosinePairs]] for the scale shape. */
   def sparseCosinePairs(docs: DataFrame, idCol: String, textCol: String,
       dfMin: Int = 2, dfMax: Int = 10, minShared: Int = 3,
@@ -4074,7 +4093,8 @@ object Graft {
     * turns "superseded" into "bytes gone" under retention — run it
     * when the grace window a pinned reader needs has passed, or with
     * `retain = 1` to reclaim everything but the current snapshot.
-    * Completes any pending swap first; takes the single-writer lease. */
+    * Completes any pending swap first; takes the single-writer lease.
+    * d32 runs it after its rollback, under the oracle gate. */
   def expireSnapshots(s: SparkSession, path: String, retain: Int = 1): Unit =
     expireWith(s, path)(
       graft.internal.SnapshotManifest.sweepTo(_, _, retain))
@@ -4109,8 +4129,9 @@ object Graft {
     * state by committing it as a NEW manifest version — history moves
     * strictly forward, nothing is rewritten or deleted by the
     * rollback itself, and the rolled-back-FROM state stays
-    * time-travelable until `retain` expires it (pass `retain = 1` for
-    * a destructive undo whose bad commit leaves disk at this sweep).
+    * time-travelable until the default retention window expires it
+    * (follow with [[expireSnapshots]] `retain = 1` for a destructive
+    * undo whose bad commit leaves disk at once, as d32 does).
     * Metadata-sized: under retention every file of a retained version
     * is still at its path (verified loudly per entry), so the verb is
     * one manifest write — no data movement, which is what makes
@@ -4119,8 +4140,7 @@ object Graft {
     * verbs commit with `retain = 1`, so a purged state's predecessor
     * is NOT retained and rollback CANNOT resurrect purged rows — the
     * target fails loudly as expired instead. */
-  def rollbackSnapshot(s: SparkSession, path: String, version: Long,
-      retain: Int = graft.internal.SnapshotManifest.DefaultRetain): Unit = {
+  def rollbackSnapshot(s: SparkSession, path: String, version: Long): Unit = {
     import org.apache.hadoop.fs.Path
     val (lfs, root) = graft.internal.LayoutFs.of(s, path)
     graft.internal.LayoutLease.acquire(lfs, root)
@@ -4140,7 +4160,8 @@ object Graft {
         }
         graft.internal.SnapshotManifest.writeNext(lfs, root,
           graft.internal.SnapshotManifest.NoStaging, rels)
-        graft.internal.SnapshotManifest.sweepTo(lfs, root, retain)
+        graft.internal.SnapshotManifest.sweepTo(lfs, root,
+          graft.internal.SnapshotManifest.DefaultRetain)
       }
     } finally graft.internal.LayoutLease.release(lfs, root)
   }
@@ -4165,17 +4186,22 @@ object Graft {
     * scheduling explodes, and the NameNode/listing layer melts —
     * compaction rewrites the same bytes into files of `targetBytes`.
     *
-    * Sizing reads file-system METADATA only (sum of data-file
-    * lengths — never a data scan); the rewrite is then
+    * Reads every file `s.read.parquet(inputPath)` reads (a single
+    * file, any file names, hive partitions with their columns), and
+    * sizes from that read's file index: METADATA only, never a data
+    * scan. The rewrite is then
     *   - `clusterBy` empty: `coalesce(n)` — a SHUFFLE-FREE merge of
     *     existing partitions, the cheap path when only the file count
     *     is the problem;
-    *   - `clusterBy` set: `repartitionByRange(n, cols) +
-    *     sortWithinPartitions(cols)` — one shuffle that also restores
-    *     CLUSTERING, so each output file covers a narrow key range
-    *     and min/max row-group statistics make post-compaction scans
-    *     prune on the cluster key (the OPTIMIZE-with-sort shape;
-    *     plan-asserted on q37's date filter).
+    *   - `clusterBy` set: [[rangePlaced]] on `cols` +
+    *     `sortWithinPartitions(cols, other orderable columns)` — one
+    *     data shuffle that also restores CLUSTERING, so each output
+    *     file covers a narrow key range and min/max row-group
+    *     statistics make post-compaction scans prune on the cluster
+    *     key (the OPTIMIZE-with-sort shape; plan-asserted on q37's
+    *     date filter). Same rows in, same output bytes: the range
+    *     bounds depend on row content only, and rows tied on
+    *     `clusterBy` break on the remaining orderable columns.
     * Returns the output file count. Compressed-input caveat: n is
     * sized from the INPUT's on-disk bytes, which for parquet-in →
     * parquet-out is the right estimator (same encoding family in and
@@ -4183,16 +4209,67 @@ object Graft {
   def compactParquet(s: SparkSession, inputPath: String, outputPath: String,
       targetBytes: Long, clusterBy: Seq[String] = Nil): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val (lfs, inRoot) = graft.internal.LayoutFs.of(s, inputPath)
-    val bytes = lfs.dataFiles(inRoot).map(_.getLen).sum
-    val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val df = s.read.parquet(inputPath)
+    // a file relation's size statistic is its file index's byte total
+    val bytes = df.queryExecution.analyzed.stats.sizeInBytes
+    val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+    val tieBreaks = df.schema.fields.toSeq.collect {
+      case f if !clusterBy.contains(f.name) &&
+          org.apache.spark.sql.catalyst.expressions.RowOrdering
+            .isOrderable(f.dataType) => f.name
+    }
     val shaped =
       if (clusterBy.isEmpty) df.coalesce(n)
-      else df.repartitionByRange(n, clusterBy.map(col): _*)
-        .sortWithinPartitions(clusterBy.map(col): _*)
+      else rangePlaced(df, clusterBy, tieBreaks, n)
+        .sortWithinPartitions((clusterBy ++ tieBreaks).map(col): _*)
     shaped.write.mode("overwrite").parquet(outputPath)
     n
+  }
+
+  /** `df` in `n` partitions of contiguous `keyCols` ranges: partition
+    * i holds the keys in [bound(i), bound(i+1)), nulls first. Not
+    * `repartitionByRange`, whose sample Spark seeds with the RDD id,
+    * so its bounds (and [[compactParquet]]'s files) moved with how
+    * many RDDs the JVM had created and with the input's file order.
+    * Here the sample is the min(100·n, 10^6) rows of least xxhash64
+    * over `keyCols ++ hashCols` — one top-k job whose answer depends
+    * on row content only. A row finds its range by binary search
+    * over the n-1 bounds ([[graft.functions.RangeSlot]]), and the
+    * shuffle stays on the Dataset path: range k maps to an Int that
+    * Spark's hash partitioning sends to partition k. */
+  private def rangePlaced(df: DataFrame, keyCols: Seq[String],
+      hashCols: Seq[String], n: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      GenericInternalRow, InterpretedOrdering}
+    import org.apache.spark.sql.types.{IntegerType, StructType}
+    import org.apache.spark.sql.graftshim.ColumnBridge
+    val key = struct(keyCols.map(col): _*)
+    val keyType = df.select(key).schema.head.dataType.asInstanceOf[StructType]
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(keyType)
+    val ord = InterpretedOrdering.forSchema(keyType.fields.toSeq.map(_.dataType))
+    val sample =
+      if (n == 1) Array.empty[InternalRow]
+      else df.select(key.as("k"),
+          xxhash64((keyCols ++ hashCols).map(col): _*).as("h"))
+        .orderBy("h", "k").limit(math.min(100L * n, 1000000L).toInt)
+        .collect().map(r => toInternal(r.getStruct(0)).asInstanceOf[InternalRow])
+        .sortWith(ord.lt)
+    val bounds = (1 until n).flatMap(i =>
+      sample.lift((i.toLong * sample.length / n).toInt))
+    val partitionId = org.apache.spark.sql.catalyst.plans.physical
+      .HashPartitioning(Seq(BoundReference(0, IntegerType, false)), n)
+      .partitionIdExpression
+    val slotOf = Array.fill(n)(-1)
+    var v = 0
+    var missing = n
+    while (missing > 0) {
+      val k = partitionId.eval(new GenericInternalRow(Array[Any](v))).asInstanceOf[Int]
+      if (slotOf(k) < 0) { slotOf(k) = v; missing -= 1 }
+      v += 1
+    }
+    df.repartition(n, ColumnBridge.column(graft.functions.RangeSlot(
+      ColumnBridge.expression(key), bounds, slotOf.toSeq)))
   }
 
   /** Small-file compaction for a HIVE-PARTITIONED index layout (the

@@ -114,7 +114,7 @@ object Similarity {
     * the expression-tree hot spot the round-1 bench flagged).
     *
     * Pairing is the same join-free capped-bucket gather as
-    * [[TextDedup.minhashCandidates]]/[[TextDedup.simhashPairs]]: ONE
+    * [[TextDedup.minhashCandidatesRaw]]/[[TextDedup.simhashPairs]]: ONE
     * groupBy(sig) collects each bucket, oversized buckets (> maxBucket
     * members — a degenerate corpus of identical/near-zero embeddings)
     * are dropped before any pair exists, in-bucket pairs unroll via
@@ -751,17 +751,12 @@ object Similarity {
   /** Nearest-centroid cell assignment against FROZEN centroids — the
     * posting-build half of the at-rest IVF index, shared by the s26
     * base build and its batch append so both phases assign under the
-    * identical argmax (same tie-break as [[graft.Graft.ivfSearch]]:
-    * max cos, then max centroid_id). */
+    * identical argmax ([[graft.Graft.assignToCentroids]], same
+    * tie-break as [[graft.Graft.ivfSearch]]: max cos, then max
+    * centroid_id). */
   private def s26Assign(df: DataFrame, cent: DataFrame): DataFrame =
-    df.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        cosine(col("embedding"), col("c")).as("cos"))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("cos"), col("centroid_id"), col("embedding")))
-        .as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.centroid_id").cast("int").as("cell"))
+    graft.Graft.assignToCentroids(df, "embedding", cent)
+      .select(col("vec_id"), col("embedding"), col("cluster").cast("int").as("cell"))
 
   /** The s26 index: s02's IVF posting lists AT REST and maintained
     * INCREMENTALLY — (vec_id, embedding) hive-partitioned by the
@@ -1110,7 +1105,7 @@ object Similarity {
     val path = s31IndexPath(s, dir)
     val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding")
     val cent = s31Centroids(s, dir)
-    // the from-scratch assignment is a full broadcast-argmax over the
+    // the from-scratch assignment is a k-centroid argmax over the whole
     // corpus — materialize it once so the two sides of the symmetric
     // difference read ONE materialization instead of re-running it
     // (atRest is a bare snapshot scan: cheaper re-read than cached).
@@ -1124,6 +1119,7 @@ object Similarity {
       .unionAll(scratch.exceptAll(atRest)).count()
     require(disagree == 0,
       "migrated IVF layout diverged from from-scratch assignment")
+    scratch.unpersist()
     ivfSearchCorpusWith(s, dir, cent, cells =>
       graft.Graft.readSnapshot(s, path).filter(col("cell").isin(cells: _*)))
   }

@@ -232,18 +232,24 @@ object TextDedup {
     * leak replaced by one aggregate. At 100 TB the collect_list buffer
     * is bounded by maxBucket for every bucket that survives; a
     * degenerate corpus (millions of byte-identical docs) should run
-    * exact dedup (d01) first, which is standard pipeline order. */
-  def minhashCandidates(docs: DataFrame, bands: Int, rowsPerBand: Int,
-      maxBucket: Int = 64): DataFrame =
-    minhashCandidatesRaw(docs, bands, rowsPerBand, maxBucket).distinct()
+    * exact dedup (d01) first, which is standard pipeline order.
+    *
+    * No distinct: a pair that collides in k bands appears k times.
+    * Every caller feeds [[jaccardVerify]], whose per-pair groupBy
+    * collapses the multiplicity, so a distinct here would be a full
+    * extra shuffle of the pair table that changes nothing downstream. */
+  private[graft] def minhashCandidatesRaw(docs: DataFrame, bands: Int,
+      rowsPerBand: Int, maxBucket: Int = 64): DataFrame = {
+    val banded = bandedSignatures(docs, bands, rowsPerBand)
+    val buckets = banded.groupBy(col("band"), col("bucket"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
+      .filter(size(col("ds")).between(2, maxBucket))
+    buckets
+      .select(explode(unrollPairs(col("ds"),
+        (a, b) => struct(a.as("id_a"), b.as("id_b")))).as("p"))
+      .select(col("p.id_a"), col("p.id_b"))
+  }
 
-  /** [[minhashCandidates]] WITHOUT the final distinct: a pair that
-    * collides in k bands appears k times. Every in-repo consumer feeds
-    * [[jaccardVerify]], whose per-pair groupBy collapses multiplicity
-    * anyway — the distinct was a full extra shuffle of the pair table
-    * per query (d02/d06/d08 each paid it) that changed nothing
-    * downstream. Public callers wanting set semantics use
-    * [[minhashCandidates]]. */
   /** The banded LSH signature table: one (doc_id, band, bucket) row
     * per document per band, bucket = xxhash64 over the band's
     * signature rows (+ the band index, so identical row-slices in
@@ -263,18 +269,6 @@ object TextDedup {
           .map(j => element_at(col("sig"), j + 1))
         xxhash64(rows :+ lit(b): _*)
       }: _*)).as(Seq("band", "bucket")))
-  }
-
-  private[graft] def minhashCandidatesRaw(docs: DataFrame, bands: Int,
-      rowsPerBand: Int, maxBucket: Int = 64): DataFrame = {
-    val banded = bandedSignatures(docs, bands, rowsPerBand)
-    val buckets = banded.groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")).between(2, maxBucket))
-    buckets
-      .select(explode(unrollPairs(col("ds"),
-        (a, b) => struct(a.as("id_a"), b.as("id_b")))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
   }
 
   /** Exact word-shingle Jaccard for a pair table (verification step of
@@ -346,16 +340,20 @@ object TextDedup {
     * (25 pairs >= 0.9 at sf0.01, nothing else above 0.3), so this query
     * is oracle-checkable against a DuckDB brute-force all-pairs jaccard
     * — proving the banded LSH + verify pipeline catches every real
-    * near-duplicate, not merely that it ranks text. */
+    * near-duplicate, not merely that it ranks text. Binds
+    * [[graft.Graft.nearDupPairs]] at d02's 8x4 banding. */
   def d06NearDupPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables(s, dir, "documents")
-    val pairs = minhashCandidatesRaw(docs, bands = 8, rowsPerBand = 4)
-    jaccardVerify(docs, pairs)
-      .filter($"jaccard" >= 0.8)
+    d06Pairs(s, dir)
       .select($"id_a", $"id_b", round($"jaccard", 4).as("jaccard"))
       .orderBy($"id_a", $"id_b")
   }
+
+  /** The d06/d08/d18 pair set: [[graft.Graft.nearDupPairs]] over the
+    * corpus at 8x4 banding, jaccard >= 0.8. */
+  private def d06Pairs(s: SparkSession, dir: String): DataFrame =
+    graft.Graft.nearDupPairs(Tables(s, dir, "documents"), "text", "doc_id",
+      bands = 8)
 
   /** Component-minimum labels for an undirected pair graph: returns
     * (id, root) where root is the smallest id reachable from id. This
@@ -548,10 +546,7 @@ object TextDedup {
     * over the same exact-jaccard pair set. */
   def d08NearDupDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables(s, dir, "documents")
-    val cand = minhashCandidatesRaw(docs, bands = 8, rowsPerBand = 4)
-    val pairs = jaccardVerify(docs, cand).filter($"jaccard" >= 0.8)
-    componentMin(pairs)
+    componentMin(d06Pairs(s, dir))
       .filter($"root" < $"id")
       .select($"id".as("doc_id"), $"root".as("kept_id"))
       .orderBy($"doc_id")
@@ -571,10 +566,7 @@ object TextDedup {
     * downstream keep/collapse/aggregate steps join on. */
   def d18ComponentsDistributed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables(s, dir, "documents")
-    val cand = minhashCandidatesRaw(docs, bands = 8, rowsPerBand = 4)
-    val pairs = jaccardVerify(docs, cand).filter($"jaccard" >= 0.8)
-    componentMin(pairs, localEdgeGate = 0L)
+    componentMin(d06Pairs(s, dir), localEdgeGate = 0L)
       .select($"id".as("doc_id"), $"root".as("component_id"))
       .orderBy($"doc_id")
   }
@@ -753,13 +745,15 @@ object TextDedup {
       .orderBy($"doc_id")
   }
 
-  /** d07 — SimHash near-dup pairs, driver-visible: block-LSH bucketing
-    * then hamming verify over the corpus's planted near-dups. No oracle
-    * (fingerprints are xxhash64-derived, which DuckDB cannot compute);
-    * the rows-only check still pins the caught-pair count. */
+  /** d07 — SimHash near-dup pairs ([[graft.Graft.simhashPairs]], which
+    * this binds): block-LSH bucketing then hamming verify over the
+    * corpus's planted near-dups. The oracle inlines XXH64 in DuckDB
+    * SQL (tools/gen_xxh64_sql.py), so the fingerprints are checked
+    * too. */
   def d07SimhashPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    simhashPairs(Tables(s, dir, "documents"), maxHamming = 3)
+    graft.Graft.simhashPairs(Tables(s, dir, "documents"), "text", "doc_id",
+        maxHamming = 3)
       .select($"id_a", $"id_b", $"hamming")
       .orderBy($"id_a", $"id_b")
   }
@@ -795,7 +789,7 @@ object TextDedup {
 
   /** SimHash near-dup pairs: block-LSH (4 x 16-bit blocks) then hamming
     * distance <= maxHamming via bit_count(xor). Same join-free
-    * collect_list pairing as [[minhashCandidates]] — the earlier
+    * collect_list pairing as [[minhashCandidatesRaw]] — the earlier
     * self-join referenced the fingerprint table twice, recomputing the
     * (expensive) simhash per side; here each fingerprint is computed
     * exactly once and buckets are capped before any pair exists. */
@@ -909,23 +903,15 @@ object TextDedup {
     * corpus, and AQE broadcasts it at harness scale (at 100 TB it is a
     * shuffled equi-join on 8-byte keys — still the right shape). LEFT
     * join keeps zero-leak test docs in the report (an audit that only
-    * lists offenders can't prove cleanliness). */
+    * lists offenders can't prove cleanliness). Binds
+    * [[graft.Graft.splitLeakage]] with the test split as the audit
+    * and the train split as the corpus. */
   def d12CrossSplitLeakage(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val docs = Tables.spread(Tables(s, dir, "documents"))
     val bucket = TextAnalysis.hashSplitBucket($"doc_id")
-    val chunked = Tables.spread(Tables(s, dir, "documents"))
-      .filter($"text".isNotNull)
-      .select($"doc_id", bucket.as("bucket"),
-        explode(tokenChunks($"text", 20)).as("chunk"))
-      .select($"doc_id", $"bucket", xxhash64($"chunk").as("h"))
-      .distinct()
-    val trainH = chunked.filter($"bucket" < 52429)
-      .select($"h".as("th")).distinct()
-    chunked.filter($"bucket" >= 58982)
-      .join(trainH, $"h" === $"th", "left")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(when($"th".isNotNull, 1L).otherwise(0L)).as("n_leaked"))
+    graft.Graft.splitLeakage(docs.filter(bucket >= 58982),
+        docs.filter(bucket < 52429), "doc_id", "text", chunkLen = 20)
       .orderBy($"doc_id")
   }
 
@@ -974,7 +960,7 @@ object TextDedup {
     * over every shared shingle.
     *
     * Scale shape: the inverted-index gather is the capped-bucket
-    * pattern ([[minhashCandidates]]) with the cap implied by the df
+    * pattern ([[minhashCandidatesRaw]]) with the cap implied by the df
     * bound — a posting list of at most 10 docs yields at most 45
     * pairs, and df is a groupBy aggregate the weight table needs
     * anyway. The rerank joins the bounded pair set against the per-doc
@@ -985,7 +971,7 @@ object TextDedup {
     * cosine's round-6 grid), and ranking compares the ROUNDED cosine
     * on both sides (the s06 argument). */
   def d17TfidfPairs(s: SparkSession, dir: String): DataFrame =
-    sparseCosinePairs(
+    graft.Graft.sparseCosinePairs(
       Tables.spread(Tables(s, dir, "documents")), "doc_id", "text")
 
   /** The d17 kernel over an arbitrary frame (see [[d17TfidfPairs]] for
@@ -1563,16 +1549,17 @@ object TextDedup {
     * build cycle leaves its OWN layout copy (tag `cmp_rb` — rollback
     * mutates manifests, so it shares nothing with d30/d31, the d26
     * isolation discipline) at two retained versions, and the query
-    * rolls the CURRENT state back to the pre-merge bootstrap with
-    * `retain = 1` — the destructive undo that also makes the verb
-    * idempotent across harness invocations (after the first run only
-    * the rolled-back version is retained; a re-run finds the target
-    * already current and no-ops). The oracle is the from-scratch
-    * closure over the STANDING edges only — a rollback that resolves
-    * the wrong version, loses a file, or silently keeps the merged
-    * state hash-fails on every merged component. Rollback itself is
-    * ONE manifest write (no data movement) — the property that makes
-    * undoing a bad 100 TB commit instant. */
+    * rolls the CURRENT state back to the pre-merge bootstrap, then
+    * expires every other version ([[graft.Graft.expireSnapshots]]
+    * with `retain = 1`) — the destructive undo that also makes the
+    * verbs idempotent across harness invocations (after the first run
+    * only the rolled-back version is retained; a re-run finds the
+    * target already current and both verbs no-op). The oracle is the
+    * from-scratch closure over the STANDING edges only — a rollback
+    * that resolves the wrong version, loses a file, or silently keeps
+    * the merged state hash-fails on every merged component. Rollback
+    * itself is ONE manifest write (no data movement) — the property
+    * that makes undoing a bad 100 TB commit instant. */
   def d32SnapshotRollback(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val path = Layout.tmpPath("cmp_rb", dir)
@@ -1590,7 +1577,8 @@ object TextDedup {
     }
     val versions = graft.Graft.snapshotVersions(s, path)
     require(versions.nonEmpty, s"d32 expects a snapshot-carrying layout")
-    graft.Graft.rollbackSnapshot(s, path, versions.head, retain = 1)
+    graft.Graft.rollbackSnapshot(s, path, versions.head)
+    graft.Graft.expireSnapshots(s, path, retain = 1)
     graft.Graft.componentsRead(s, path)
       .select($"id".as("node_id"), $"root".as("component_id"))
       .orderBy($"node_id")

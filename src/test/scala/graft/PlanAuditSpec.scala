@@ -420,6 +420,12 @@ class PlanAuditSpec extends SparkSuiteBase {
         "peakConcurrency" -> Graft.peakConcurrency(src, "k", "s", "e"),
         "intervalCoverage" -> Graft.intervalCoverage(src, "k", "s", "e"),
         "hdrBuckets" -> Graft.hdrBuckets(src, "k", col("e") - col("s") + 1L))
+      // bad pageRank arguments throw before the edge checkpoint runs
+      val edges = src.select(col("k").as("src"), col("s").as("dst"))
+      intercept[IllegalArgumentException](Graft.pageRank(edges, iters = 0))
+      intercept[IllegalArgumentException](Graft.pageRankFrom(edges,
+        edges.select(col("src").as("node"), col("dst").as("rank_e9")),
+        dampingPct = 101))
       // the listener bus is async (and private[spark]) — drain it by
       // running ONE sentinel job and waiting until the listener has
       // seen it; the bus is FIFO, so any job the constructions above

@@ -85,7 +85,7 @@ class DedupSimilaritySpec extends SparkSuiteBase {
   }
 
   test("minhash LSH finds exact and near duplicates, not unrelated docs") {
-    val cand = TextDedup.minhashCandidates(docs, bands = 16, rowsPerBand = 4)
+    val cand = TextDedup.minhashCandidatesRaw(docs, bands = 16, rowsPerBand = 4)
     val verified = TextDedup.jaccardVerify(docs, cand)
       .filter($"jaccard" >= 0.5)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
@@ -112,7 +112,7 @@ class DedupSimilaritySpec extends SparkSuiteBase {
     val sf = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     // candidate generation: collect_list pairing — no join, no window
-    val candPlan = TextDedup.minhashCandidates(docs, 8, 4)
+    val candPlan = TextDedup.minhashCandidatesRaw(docs, 8, 4)
       .queryExecution.executedPlan.toString
     assert(!candPlan.contains("Join"), s"candidates plan has a join:\n$candPlan")
     assert(!candPlan.contains("Window"), s"candidates plan has a window:\n$candPlan")
